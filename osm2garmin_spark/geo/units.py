@@ -85,8 +85,3 @@ def round_nearest(val, shift):
     u = _as_u32(np.asarray(val, dtype=np.int64) + (1 << (shift - 1)))
     res = _to_i32((u >> np.uint64(shift)) << np.uint64(shift))
     return int(res) if np.isscalar(val) else res
-
-
-def is_power_of_two(n: int) -> bool:
-    """Utils.java:74-76."""
-    return n > 0 and (n & (n - 1)) == 0

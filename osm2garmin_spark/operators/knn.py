@@ -92,12 +92,23 @@ def knn_bruteforce_np(queries: DataFrame, neighbors: DataFrame, k: int,
     ids = ids[order]
     lats = np.array([r[1] for r in rows], dtype=np.float64)[order]
     lons = np.array([r[2] for r in rows], dtype=np.float64)[order]
-    bc = spark.sparkContext.broadcast((ids, lats, lons))
+    # Spark sorts a NaN d² above every double, so NaN-coordinate neighbors
+    # rank after all finite ones, by n_id: move them behind the nv finite
+    # columns (both parts stay id-sorted) and keep them out of the distance
+    # matrix. A NaN query ties every neighbor: its ranks are the k lowest
+    # ids, found at by_id.
+    nan_nb = np.isnan(lats) | np.isnan(lons)
+    nan_last = np.argsort(nan_nb, kind="stable")
+    ids, lats, lons = ids[nan_last], lats[nan_last], lons[nan_last]
+    nv = int(len(ids) - nan_nb.sum())
+    by_id = np.argsort(nan_last, kind="stable")[:k]
+    bc = spark.sparkContext.broadcast((ids, lats[:nv], lons[:nv], by_id))
 
     def kernel(it):
-        nid_s, nlat_s, nlon_s = bc.value
+        nid_s, nlat_s, nlon_s, by_id = bc.value
         nn = len(nid_s)
         kk = min(k, nn)
+        kv = min(kk, nv)
         # blockwise distance matrix in REUSED cache-resident buffers, and
         # k argmin passes instead of a full stable argsort (guide §1.2
         # step 2 — per-task work). The old kernel materialized three
@@ -111,9 +122,9 @@ def knn_bruteforce_np(queries: DataFrame, neighbors: DataFrame, k: int,
         # returns the FIRST minimum, i.e. the lowest column index = the
         # lowest n_id (ids are sorted), exactly the stable-argsort order
         # the window twin pins.
-        blk = max(1, (4 << 20) // (8 * max(nn, 1)))   # ~2 × 4 MB buffers
-        d2b = np.empty((blk, nn))
-        dyb = np.empty((blk, nn))
+        blk = max(1, (4 << 20) // (8 * max(nv, 1)))   # ~2 × 4 MB buffers
+        d2b = np.empty((blk, nv))
+        dyb = np.empty((blk, nv))
         for pdf in it:
             m = len(pdf)
             if m == 0:
@@ -121,6 +132,7 @@ def knn_bruteforce_np(queries: DataFrame, neighbors: DataFrame, k: int,
             qla = pdf[q_lat].to_numpy(np.float64)
             qlo = pdf[q_lon].to_numpy(np.float64)
             idx = np.empty((m, kk), dtype=np.int64)
+            idx[:, kv:] = np.arange(nv, nv + kk - kv)
             for s in range(0, m, blk):
                 e = min(s + blk, m)
                 b = e - s
@@ -130,10 +142,11 @@ def knn_bruteforce_np(queries: DataFrame, neighbors: DataFrame, k: int,
                 np.multiply(dyb[:b], dyb[:b], out=dyb[:b])
                 np.add(d2b[:b], dyb[:b], out=d2b[:b])
                 rr = np.arange(b)
-                for j in range(kk):
+                for j in range(kv):
                     idx[s:e, j] = np.argmin(d2b[:b], axis=1)
-                    if j + 1 < kk:
+                    if j + 1 < kv:
                         d2b[rr, idx[s:e, j]] = np.inf
+            idx[np.isnan(qla) | np.isnan(qlo)] = by_id
             yield pd.DataFrame({
                 q_id: pdf[q_id].to_numpy().repeat(kk),
                 n_id: nid_s[idx].reshape(-1),

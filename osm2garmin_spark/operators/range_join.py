@@ -22,20 +22,28 @@ Scale design (no cartesian product, ever):
      the documented limit of lat/lon grids — polar data wants the S2
      index, geo/s2.py).
 
-   The longitude ring is UNIFORM: n_x = max(3, floor(360 / cell_lon))
-   cells of width 360/n_x >= cell_lon each, indexed by
-   ix = floor((lon + 180) * n_x / 360) mod n_x. A fixed-width grid with
+   The longitude lattice is per latitude ROW: row iy gets its own
+   uniform ring of n_x(iy) = max(1, floor(360 / W(iy))) cells of width
+   360/n_x(iy) >= W(iy), where W(iy) is the rigorous lon bound above
+   evaluated at the smallest cos(lat) over rows iy-1..iy+1 (the rows a
+   qualifying partner can occupy); rows where W spans the globe
+   collapse to one cell. A point keys to
+   ix = floor((lon + 180) * n_x(iy) / 360) mod n_x(iy) — the mod puts
+   lon == +180.0 in cell 0, beside -180.0. A fixed-width grid with
    ceil() would leave a narrower residual cell before the antimeridian
    seam, putting wrapped pairs 2 cells apart (mod n_x) and silently
    dropping them; uniform widths restore the adjacency invariant around
-   the whole circle. Any qualifying pair is therefore in the same or an
-   adjacent cell.
-2. **3x3 ring explode on the LEFT side only** (9 rows per left point —
-   same discipline as operators/knn.py: the big right side keys once
-   and shuffles once on the cell key, never explodes).
-3. **Dateline wrap**: the lon cell index is taken modulo the ring width,
-   so the last cell and cell 0 are adjacent; the haversine's
-   sin(dlon/2) is periodic, so the refine needs no unwrapping.
+   each ring. Any qualifying pair is therefore in the same or an
+   adjacent cell of the b-point's row.
+2. **3x3 ring explode on the LEFT side only** (up to 9 rows per left
+   point: for each of rows iy-1..iy+1, the <= 3 cells of THAT row's
+   ring around the point's lon — same discipline as operators/knn.py:
+   the big right side keys once and shuffles once on the cell key,
+   never explodes).
+3. **Dateline wrap**: every lon cell index, base and ring neighbors,
+   is taken modulo its row's ring width, so the last cell and cell 0
+   are adjacent; the haversine's sin(dlon/2) is periodic, so the
+   refine needs no unwrapping.
 4. **Equi-join on (cell_x, cell_y)** — hash-partitioned, AQE-skew-
    splittable — then cheap exact |dlat|/|dlon| pre-rejects and a
    COMPARISON-ONLY trig residual: per-ROW quantities (half-angle
@@ -263,11 +271,12 @@ def range_join_within(a: DataFrame, b: DataFrame, radius_km: float,
                 .drop("_g"))
 
     def with_ix(df: DataFrame) -> DataFrame:
-        # base cell in the row's own ring: lon in [-180, 180) keeps the
-        # floor inside [0, n_x-1] with no mod
+        # base cell in the row's own ring, mod n_x: lon == +180.0 floors
+        # to n_x and must wrap to cell 0, the seam's other side
         nx = n_x_of_row.cast("double")
         ix = F.floor((F.col("lon") + F.lit(180.0)) * nx / F.lit(360.0))
-        return df.withColumn("_ix", F.when(~F.isnan(F.col("lon")), ix))
+        return df.withColumn(
+            "_ix", F.when(~F.isnan(F.col("lon")), F.pmod(ix, n_x_of_row)))
 
     ak = keyed(a, "a")
     bk = with_ix(keyed(b, "b"))
@@ -282,7 +291,7 @@ def range_join_within(a: DataFrame, b: DataFrame, radius_km: float,
     nx_l = n_x_of_row
     ak = (ak.select("*", F.explode(F.array_distinct(F.array(
                 F.pmod(F.col("_ix") - 1, nx_l),
-                F.col("_ix"),
+                F.pmod(F.col("_ix"), nx_l),
                 F.pmod(F.col("_ix") + 1, nx_l)))).alias("_ixr"))
             .drop("_ix").withColumnRenamed("_ixr", "_ix"))
 

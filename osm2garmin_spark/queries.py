@@ -64,6 +64,26 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _read_spread(spark: SparkSession, sf_dir: str, name: str,
+                 *cols) -> DataFrame:
+    """``_read`` projected to ``cols`` (names or Column expressions), then
+    spread round-robin over ``defaultParallelism`` partitions.
+
+    Every sf table is one parquet file holding ONE row group, and a row
+    group is the unit a parquet scan splits on, so the scan is one task
+    however Spark plans it (sf0.1 lineitem, 10.8 MB, planned as 4 splits
+    at maxPartitionBytes=4m, read all 600k rows in one). Queries whose
+    per-row work is heavy (derived coordinates, text kernels, image
+    synth/decode, Lloyd passes) read through here so that work runs on
+    every core; the exchange carries only ``cols``. Filters applied to
+    the result are pushed below the exchange into the scan. The spread
+    pays off only while inputs are single-row-group: a table written
+    with many row groups or files already scans wide and should use
+    ``_read``."""
+    return (_read(spark, sf_dir, name).select(*cols)
+            .repartition(spark.sparkContext.defaultParallelism))
+
+
 def _parquet_rows(sf_dir: str, name: str) -> int:
     """Row count straight from parquet footer metadata — zero Spark jobs.
     This is the 'lineage/catalog stats' leg of ANN auto-sizing (VERDICT r2
@@ -1048,15 +1068,11 @@ def range_knn_customers_events(spark, sf_dir):
     distance tree."""
     from .operators.range_join import range_join_within
 
-    par = spark.sparkContext.defaultParallelism
-    cust = _read(spark, sf_dir, "customer").repartition(par).select(
+    cust = _read_spread(spark, sf_dir, "customer", "c_custkey").select(
         F.col("c_custkey"),
         derived_lat(F.col("c_custkey") + 900000).alias("lat"),
         derived_lon(F.col("c_custkey") + 900000).alias("lon"))
-    # repartition BEFORE the coordinate derivation: the events table is a
-    # single-row-group scan, and the probe side of the blocked join (and
-    # its per-row trig projection) otherwise runs on one core
-    ev = (_read(spark, sf_dir, "events").select("event_id").repartition(par)
+    ev = (_read_spread(spark, sf_dir, "events", "event_id")
           .select("event_id",
                   derived_lat(F.col("event_id")).alias("lat"),
                   derived_lon(F.col("event_id")).alias("lon")))
@@ -1175,14 +1191,11 @@ def range_join_customers_events(spark, sf_dir):
     blocking dropped no pair."""
     from .operators.range_join import range_join_within
 
-    par = spark.sparkContext.defaultParallelism
-    cust = _read(spark, sf_dir, "customer").repartition(par).select(
+    cust = _read_spread(spark, sf_dir, "customer", "c_custkey").select(
         F.col("c_custkey"),
         derived_lat(F.col("c_custkey") + 900000).alias("lat"),
         derived_lon(F.col("c_custkey") + 900000).alias("lon"))
-    # single-row-group events scan: spread the probe side (see
-    # range_knn_customers_events)
-    ev = (_read(spark, sf_dir, "events").select("event_id").repartition(par)
+    ev = (_read_spread(spark, sf_dir, "events", "event_id")
           .select("event_id",
                   derived_lat(F.col("event_id")).alias("lat"),
                   derived_lon(F.col("event_id")).alias("lon")))
@@ -1375,14 +1388,11 @@ SELECT DISTINCT rel_id, tile_id FROM (
 def knn_customers_suppliers(spark, sf_dir):
     """grid-accelerated exact 3-NN: customer points → supplier points
     (generalizes DefaultCityFinder.java:39-105 sort-refine)."""
-    # derived coords are heavy scalar chains over single-file inputs —
-    # repartition the raw reads so the derivation runs across cores
-    par = spark.sparkContext.defaultParallelism
-    cust = _read(spark, sf_dir, "customer").repartition(par).select(
+    cust = _read_spread(spark, sf_dir, "customer", "c_custkey").select(
         F.col("c_custkey").alias("q_id"),
         derived_lat(F.col("c_custkey") + 900000).alias("q_lat"),
         derived_lon(F.col("c_custkey") + 900000).alias("q_lon"))
-    supp = _read(spark, sf_dir, "supplier").repartition(par).select(
+    supp = _read_spread(spark, sf_dir, "supplier", "s_suppkey").select(
         F.col("s_suppkey").alias("n_id"),
         derived_lat(F.col("s_suppkey") + 300000).alias("n_lat"),
         derived_lon(F.col("s_suppkey") + 300000).alias("n_lon"))
@@ -1421,8 +1431,7 @@ def knn_stratified_customers_events(spark, sf_dir):
     contract as knn_customers_suppliers, now over the stratified path."""
     from .operators.knn import knn_grid_stratified
 
-    par = spark.sparkContext.defaultParallelism
-    cust = _read(spark, sf_dir, "customer").repartition(par).select(
+    cust = _read_spread(spark, sf_dir, "customer", "c_custkey").select(
         F.col("c_custkey").alias("q_id"),
         derived_lat(F.col("c_custkey") + 900000).alias("q_lat"),
         derived_lon(F.col("c_custkey") + 900000).alias("q_lon"))
@@ -1432,7 +1441,7 @@ def knn_stratified_customers_events(spark, sf_dir):
     # bench scale. At production scale these are stored columns — the
     # checkpoint stands in for that storage, not for the neighbor table
     # itself (the operator still never collects or explodes it).
-    ev = _read(spark, sf_dir, "events").repartition(par).select(
+    ev = _read_spread(spark, sf_dir, "events", "event_id").select(
         F.col("event_id").alias("n_id"),
         derived_lat(F.col("event_id")).alias("n_lat"),
         derived_lon(F.col("event_id")).alias("n_lon")).localCheckpoint()
@@ -1474,12 +1483,11 @@ def knn_hex_customers_events(spark, sf_dir):
     plain cross-join window — the same contract as the grid twins."""
     from .operators.knn_hex import knn_hex_kring
 
-    par = spark.sparkContext.defaultParallelism
-    cust = _read(spark, sf_dir, "customer").repartition(par).select(
+    cust = _read_spread(spark, sf_dir, "customer", "c_custkey").select(
         F.col("c_custkey").alias("q_id"),
         derived_lat(F.col("c_custkey") + 900000).alias("q_lat"),
         derived_lon(F.col("c_custkey") + 900000).alias("q_lon"))
-    ev = _read(spark, sf_dir, "events").repartition(par).select(
+    ev = _read_spread(spark, sf_dir, "events", "event_id").select(
         F.col("event_id").alias("n_id"),
         derived_lat(F.col("event_id")).alias("n_lat"),
         derived_lon(F.col("event_id")).alias("n_lon")).localCheckpoint()
@@ -1756,12 +1764,7 @@ HAVING count(*) % 2 = 1
 # ---------------------------------------------------------------------------
 
 def doc_text_features(spark, sf_dir):
-    # documents ships as one row group (unsplittable scan) while the text
-    # functions are compute-bound — spread across cores, but shuffle ONLY
-    # the projected columns, not the full row (VERDICT r2 item 4)
-    docs = _read(spark, sf_dir, "documents") \
-        .select("doc_id", "text", "n_chars") \
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = _read_spread(spark, sf_dir, "documents", "doc_id", "text", "n_chars")
     return docs.select(
         "doc_id",
         T.token_count(F.col("text")).alias("n_tokens"),
@@ -1798,9 +1801,7 @@ def doc_quality_signals(spark, sf_dir):
     """quality-filter signal columns (brief: length/punct/stopword
     ratios): punctuation count and stopword hits per thousand tokens —
     integer-exact so the DuckDB twin hashes identically."""
-    docs = _read(spark, sf_dir, "documents") \
-        .select("doc_id", "text") \
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = _read_spread(spark, sf_dir, "documents", "doc_id", "text")
     return docs.select(
         "doc_id",
         F.length("text").alias("n_chars_text"),
@@ -1891,10 +1892,7 @@ def incremental_dedup_new_docs(spark, sf_dir):
     a bucket join, not a full-corpus rebuild. Returns each new doc with
     its nearest seen near-dup (min seen id) — NULL-free: only flagged
     docs emit."""
-    # single-row-group scan: the |new|-side signature computation is the
-    # incremental cost and otherwise runs one-task (value-neutral)
-    docs = _read(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
+    docs = _read_spread(spark, sf_dir, "documents", "doc_id", "text")
     seen = docs.filter(F.col("doc_id") < 300)
     new = docs.filter(F.col("doc_id") >= 300)
     sig_seen = D.minhash_signatures(seen, "doc_id", "text", 1, 16)
@@ -1946,13 +1944,9 @@ def decontaminate_docs(spark, sf_dir):
     rows reach the final groupBy."""
     from .functions.decontam import contamination_hits
 
-    docs = _read(spark, sf_dir, "documents")
-    evalset = docs.filter(F.col("doc_id") < 50)
-    # the shingle build is the CPU hot loop; spread the single-file scan
-    # before it (one narrow-to-wide exchange of raw text, the same
-    # discipline as doc_fingerprints)
-    corpus = docs.filter(F.col("doc_id") >= 50).repartition(
-        spark.sparkContext.defaultParallelism)
+    evalset = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
+    corpus = _read_spread(spark, sf_dir, "documents", "doc_id", "text") \
+        .filter(F.col("doc_id") >= 50)
     return contamination_hits(corpus, evalset, "doc_id", "text", n=5)
 
 
@@ -2056,9 +2050,8 @@ def events_table_checksums(spark, sf_dir):
     covers the canonicalization needed to include them)."""
     from .functions.checksum import table_checksum
 
-    ev = _read(spark, sf_dir, "events").repartition(
-        spark.sparkContext.defaultParallelism)
-    return table_checksum(ev, ["event_id", "user_id", "event_type"],
+    cols = ["event_id", "user_id", "event_type"]
+    return table_checksum(_read_spread(spark, sf_dir, "events", *cols), cols,
                           buckets=8)
 
 
@@ -2106,8 +2099,7 @@ def doc_similar_top3(spark, sf_dir):
     quadratic posting buckets)."""
     from .functions.retrieval import similar_topk
 
-    docs = _read(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
+    docs = _read_spread(spark, sf_dir, "documents", "doc_id", "text")
     qids = docs.filter(F.col("doc_id") < 20).select("doc_id")
     out = similar_topk(docs, qids, k=3, max_df=400)
     # dtype parity with the (frozen) oracle: DuckDB SUM(BIGINT) → HUGEINT
@@ -2185,10 +2177,7 @@ def kmeans_embed_clusters(spark, sf_dir):
     could never pass this gate (sum-order/tie noise)."""
     from .functions.kmeans import kmeans_fit
 
-    # single-row-group scan: every Lloyd pass re-reads the table; spread
-    # the quantize+assign work across cores
-    emb = _read(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism)
+    emb = _read_spread(spark, sf_dir, "embeddings", "vec_id", "embedding")
     _, assigned = kmeans_fit(emb, "vec_id", "embedding", k=4, iters=2,
                              dim=64)
     return assigned
@@ -2200,9 +2189,7 @@ def _kmeans_sql() -> str:
 
 
 def doc_fingerprints(spark, sf_dir):
-    docs = _read(spark, sf_dir, "documents") \
-        .select("doc_id", "text") \
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = _read_spread(spark, sf_dir, "documents", "doc_id", "text")
     return docs.select("doc_id", T.fingerprint(F.col("text")).alias("fp"))
 
 
@@ -2212,12 +2199,7 @@ SELECT doc_id, {T.fingerprint_sql('text')} AS fp FROM documents
 
 
 def doc_simhash(spark, sf_dir):
-    # documents is one small file (one scan task) but simhash is a
-    # compute-bound per-word fold — spread the projected columns across
-    # cores first (never shuffle unprojected payload, VERDICT r2 item 4)
-    docs = _read(spark, sf_dir, "documents") \
-        .select("doc_id", "text") \
-        .repartition(spark.sparkContext.defaultParallelism)
+    docs = _read_spread(spark, sf_dir, "documents", "doc_id", "text")
     return docs.select("doc_id", D.simhash16(F.col("text")).alias("simhash"))
 
 
@@ -2245,10 +2227,8 @@ WHERE rn = 1
 
 def jaccard_pairs_docs(spark, sf_dir):
     """exact unigram-Jaccard near-dup pairs on a doc subset (≥0.6)."""
-    # 300 docs off a single-row-group scan: spread the interpreted
-    # shingle/minhash lambdas across cores (value-neutral)
-    docs = (_read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents", "doc_id", "text") \
+        .filter(F.col("doc_id") < 300)
     out = D.ngram_jaccard_pairs(docs, "doc_id", "text", n=1, threshold=0.6)
     return out.select("doc_a", "doc_b", "inter", "sz_a", "sz_b")
 
@@ -2461,12 +2441,7 @@ SELECT event_id, event_type, value_cents FROM gated WHERE action <> 'delete'
 def tiling_pipeline_counts(spark, sf_dir):
     """full reference pipeline: density → driver quadtree → assignment →
     per-tile counts (tile boundaries included for regression eyeballs)."""
-    # single-row-group events scan: the density partial-agg and the
-    # broadcast assignment probe otherwise run one-task (the exchange is
-    # ids only, BEFORE the coordinate derivation; the tile join itself
-    # still never shuffles the fact — plan-guarded)
-    pts = (_read(spark, sf_dir, "events").select("event_id")
-           .repartition(spark.sparkContext.defaultParallelism)
+    pts = (_read_spread(spark, sf_dir, "events", "event_id")
            .select("event_id",
                    derived_lat(F.col("event_id")).alias("lat"),
                    derived_lon(F.col("event_id")).alias("lon")))
@@ -2481,11 +2456,7 @@ def image_decode_stats(spark, sf_dir):
     and run the distributed decode/stat kernel (mapInPandas, Arrow batches)."""
     from .pipeline.synth import _gen_map
     from .operators.raster import decode_stats
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents", F.col("doc_id").alias("id"))
     images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
                               "w int, h int, fmt string, caption string, phash long")
     return decode_stats(images).select("image_id", "p_min", "p_max")
@@ -2499,11 +2470,7 @@ def image_histogram_features(spark, sf_dir):
     from .pipeline.synth import _gen_map
     from .operators.raster import histogram_features
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents", F.col("doc_id").alias("id"))
     images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
                               "w int, h int, fmt string, caption string, phash long")
     out = histogram_features(images, bins=16)
@@ -2544,11 +2511,7 @@ def image_pyramid_stats(spark, sf_dir):
     from .pipeline.synth import _gen_map
     from .operators.raster import pyramid_stats
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents", F.col("doc_id").alias("id"))
     images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
                               "w int, h int, fmt string, caption string, phash long")
     out = pyramid_stats(images, levels=2)
@@ -2595,11 +2558,7 @@ def phash_near_pairs_images(spark, sf_dir):
     from .pipeline.synth import _gen_map
     from .functions.phash import phash_from_bytes, phash_near_pairs
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents", F.col("doc_id").alias("id"))
     images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
                               "w int, h int, fmt string, caption string, phash long")
     lossless = images.filter(F.col("fmt").isin("raw", "png"))
@@ -2628,11 +2587,7 @@ def phash128_near_pairs_images(spark, sf_dir):
     from .pipeline.synth import _gen_map
     from .functions.phash import phash128_from_bytes, phash128_near_pairs
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents", F.col("doc_id").alias("id"))
     images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
                               "w int, h int, fmt string, caption string, phash long")
     lossless = images.filter(F.col("fmt").isin("raw", "png"))
@@ -2656,11 +2611,7 @@ def phash_dct_near_pairs_images(spark, sf_dir):
     from .pipeline.synth import _gen_map
     from .functions.phash import phash_dct_from_bytes, phash_near_pairs
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents", F.col("doc_id").alias("id"))
     images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
                               "w int, h int, fmt string, caption string, phash long")
     lossless = images.filter(F.col("fmt").isin("raw", "png"))
@@ -2687,11 +2638,7 @@ def phash_dedup_clusters(spark, sf_dir):
     from .pipeline.synth import _phash_map
     from .functions.phash import phash_value_near_pairs
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents", F.col("doc_id").alias("id"))
     hashes = docs.mapInPandas(
         _phash_map,
         schema="image_id long, phash long").localCheckpoint(eager=True)
@@ -2735,10 +2682,8 @@ def crossmodal_dedup_clusters(spark, sf_dir):
     from .pipeline.synth import _phash_map
     from .functions.phash import phash_near_pairs
 
-    # 300 docs off a single-row-group scan: spread the interpreted
-    # shingle/minhash lambdas across cores (value-neutral)
-    docs = (_read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents", "doc_id", "text") \
+        .filter(F.col("doc_id") < 300)
     text_pairs = D.minhash_lsh_pairs(
         docs, "doc_id", "text", n=1, num_hashes=16, bands=8).select(
         F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"))
@@ -2783,10 +2728,8 @@ SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src
 
 def minhash_candidates(spark, sf_dir):
     """MinHash-LSH near-dup candidates (scale path for jaccard_pairs_docs)."""
-    # 300 docs off a single-row-group scan: spread the interpreted
-    # shingle/minhash lambdas across cores (value-neutral)
-    docs = (_read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents", "doc_id", "text") \
+        .filter(F.col("doc_id") < 300)
     out = D.minhash_lsh_pairs(docs, "doc_id", "text", n=1, num_hashes=16, bands=8)
     return out.select("doc_a", "doc_b")
 
@@ -2855,10 +2798,8 @@ def near_dup_edit_refine(spark, sf_dir):
     Levenshtein (threshold DP, JVM-side) certifies character-level
     closeness and drops shingle-collision false positives
     (functions/dedup.edit_refine)."""
-    # 300 docs off a single-row-group scan: spread the interpreted
-    # shingle/minhash lambdas across cores (value-neutral)
-    docs = (_read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents", "doc_id", "text") \
+        .filter(F.col("doc_id") < 300)
     cand = D.minhash_lsh_pairs(docs, "doc_id", "text", n=1,
                                num_hashes=16, bands=8)
     return D.edit_refine(cand, docs, max_dist=80, prefix=120)
@@ -2877,10 +2818,8 @@ def dedup_clusters_docs(spark, sf_dir):
     canonical-survivor rule. Iterative min-label propagation
     (functions/dedup.dedup_clusters); singleton docs are their own
     cluster."""
-    # 300 docs off a single-row-group scan: spread the interpreted
-    # shingle/minhash lambdas across cores (value-neutral)
-    docs = (_read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents", "doc_id", "text") \
+        .filter(F.col("doc_id") < 300)
     pairs = D.minhash_lsh_pairs(docs, "doc_id", "text", n=1,
                                 num_hashes=16, bands=8)
     out = D.dedup_clusters(docs.select("doc_id"), pairs)
@@ -3060,10 +2999,7 @@ def ann_pq_top3(spark, sf_dir):
     per-query shortlist. The memory-bound scale path — compare with
     embed_top3 (exact) / ann_lsh_top3 / ann_ivf_top3; at 10^12 rows PQ
     composes with IVF into the published IVFADC layout."""
-    # single-row-group scan: the ADC code scan and the exact re-rank
-    # otherwise run one-task
-    emb = _read(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism)
+    emb = _read_spread(spark, sf_dir, "embeddings", "vec_id", "embedding")
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     corpus = emb.select(F.col("vec_id").alias("c_id"),
@@ -3241,11 +3177,7 @@ def dhash_near_pairs_images(spark, sf_dir):
     from .pipeline.synth import _gen_map
     from .functions.phash import dhash_from_bytes, phash_near_pairs
 
-    # single-row-group scan: spread the synth/decode kernel across
-    # cores before the opaque mapInPandas (guide §4.1 — the id-only
-    # shuffle is bytes; the per-image work is not)
-    docs = (_read(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-            .repartition(spark.sparkContext.defaultParallelism))
+    docs = _read_spread(spark, sf_dir, "documents", F.col("doc_id").alias("id"))
     images = docs.mapInPandas(_gen_map, schema="image_id string, bytes binary, "
                               "w int, h int, fmt string, caption string, phash long")
     lossless = images.filter(F.col("fmt").isin("raw", "png"))

@@ -30,13 +30,6 @@ def get_spark(app: str = "osm2garmin_spark", master: str | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # split small single-row-group files across tasks: the sf tables
-        # arrive as one parquet file each, and 128 MB maxPartitionBytes
-        # planned them as ONE task — compute-heavy scalar chains (map-unit
-        # codec, derived coords) then ran single-core. 16 MB keeps scans
-        # wide locally; on a real cluster the inputs are many files anyway.
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
     )

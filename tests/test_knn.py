@@ -304,3 +304,23 @@ def test_plan_strata_multi_spike_median_threshold(spark):
                                                 n_strata=n_strata).collect()))
     want = sorted(map(tuple, knn_broadcast(qd, nd, 3).collect()))
     assert got == want
+
+
+def test_bruteforce_np_ranks_nan_neighbor_last(spark):
+    """Spark sorts a NaN distance above every double, so the window twin
+    ranks a NaN-coordinate neighbor after all finite ones (n_id order
+    among NaNs) and a NaN query's neighbors purely by n_id. The numpy
+    kernel must agree; np.argmin alone ranks a NaN neighbor first. Two
+    finite neighbors and k=3, so the NaN row must still fill rank 3."""
+    from osm2garmin_spark.operators.knn import knn_bruteforce_np
+
+    nan = float("nan")
+    # row lists, not pandas: the Arrow conversion turns NaN into NULL
+    q = spark.createDataFrame([(0, 0.0, 0.0), (1, 5.0, 5.0), (2, nan, 0.0)],
+                              "q_id long, q_lat double, q_lon double")
+    nb = spark.createDataFrame([(3, 1.0, 1.0), (5, nan, 0.0), (8, 2.0, 2.0)],
+                               "n_id long, n_lat double, n_lon double")
+    got = sorted(map(tuple, knn_bruteforce_np(q, nb, 3).collect()))
+    want = sorted(map(tuple, knn_broadcast(q, nb, 3).collect()))
+    assert (0, 5, 3) in want and (2, 5, 2) in want
+    assert got == want

@@ -428,3 +428,31 @@ def test_range_join_right_side_keys_once_no_explode(spark):
     import re
     gen_ids = set(re.findall(r"\((\d+)\) Generate", plan))
     assert len(gen_ids) == 2, plan
+
+
+def test_read_spread_exchange_sits_on_the_pruned_filtered_scan(spark):
+    """queries._read_spread spreads a single-row-group scan with one
+    round-robin exchange. A doc-subset filter applied to its result must
+    be pushed below that exchange: the tree is Exchange -> Filter (the
+    row-level re-check of the pushed predicate) -> Scan, the predicate is
+    in PushedFilters, and ReadSchema holds only the requested columns —
+    the same plan as filtering before the repartition."""
+    import re
+
+    from osm2garmin_spark.queries import _read_spread
+
+    par = spark.sparkContext.defaultParallelism
+    df = _read_spread(spark, SF, "documents", "doc_id", "text") \
+        .filter(F.col("doc_id") < 300)
+    plan = _plan(df)
+    tree = plan.split("\n\n")[0].splitlines()[1:]
+    ops = [re.sub(r"[\s+\-*]*(.*?)\s*\(\d+\)\s*$", r"\1", l) for l in tree]
+    assert ops == ["AdaptiveSparkPlan", "Exchange", "Filter",
+                   "Scan parquet"], plan
+    args = [l for l in plan.splitlines() if l.startswith("Arguments:")]
+    assert sum("RoundRobinPartitioning" in l for l in args) == 1, plan
+    assert f"RoundRobinPartitioning({par})" in plan, plan
+    pushed = next(l for l in plan.splitlines() if "PushedFilters" in l)
+    assert "LessThan(doc_id,300)" in pushed, plan
+    read = next(l for l in plan.splitlines() if "ReadSchema" in l)
+    assert read.strip() == "ReadSchema: struct<doc_id:bigint,text:string>"

@@ -103,6 +103,26 @@ def test_dateline_seam_sweep_matches_brute_force(spark):
         assert got == want, r
 
 
+def test_antimeridian_exact_seam_matches_brute_force(spark):
+    """Points at exactly +-180 and within 1e-9 deg of the seam on both
+    sides, at several latitudes (several per-row ring widths): the pair
+    set must equal the all-pairs haversine. lon == +180.0 must land in
+    cell 0 of its row's ring, not one past the last cell."""
+    lats = [-60.0, -10.0, 0.0, 10.0, 45.0, 70.0]
+    lons = [180.0, -180.0, 180.0 - 1e-9, -180.0 + 1e-9, 179.9, -179.9]
+    lat = np.array([la + 0.01 * j for la in lats for j in range(len(lons))])
+    lon = np.array(lons * len(lats))
+    n = len(lat)
+    a = _mkdf(spark, range(n), lat, lon, "a_id")
+    b = _mkdf(spark, range(n), lat, lon, "b_id")
+    d = _hav_np(lat[:, None], lon[:, None], lat[None, :], lon[None, :])
+    for r in (25.0, 150.0):
+        got = sorted((x["a_id"], x["b_id"]) for x in
+                     range_join_within(a, b, r, max_abs_lat=75.0).collect())
+        want = sorted((int(i), int(j)) for i, j in zip(*np.nonzero(d <= r)))
+        assert got == want, r
+
+
 def test_nan_rows_drop_out_silently(spark):
     """ADVICE r5: Spark orders NaN above every double, so an unguarded
     abs(NaN) > cap fired the raise_error guard and killed the job. NaN
