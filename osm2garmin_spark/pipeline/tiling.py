@@ -47,9 +47,10 @@ def run_tiling_pipeline(points: DataFrame, max_nodes: int = DEFAULT_MAX_NODES,
     multi-assignment. Returns None for an empty input.
 
     split_strategy:
-    - "driver"      (default) collect the occupied-cell table, run the
-                    integer quadtree on the driver — fastest locally;
-                    driver memory O(occupied cells) ≤ grid size.
+    - "driver"      (default) collect the occupied-cell table and run the
+                    integer quadtree on it on the driver — fastest
+                    locally; driver memory O(occupied cells), whatever
+                    the resolution.
     - "distributed" level-synchronous quadtree (split/distributed.py):
                     driver holds only per-node 1-D vectors; use when the
                     occupied-cell table itself is too big to collect.

@@ -14,8 +14,9 @@ Scale notes (these were measured, not guessed):
   global exact bounds reduce to a 1-row parallel aggregate over the
   persisted cell table, so the serial Arrow transfer is 3/7 the width
   (the driver transfer is the Amdahl floor of the tiling job).
-- groupBy output has unique cells, so the driver grid is built by direct
-  fancy-index assignment, not np.add.at (buffered ufunc, ~10× slower).
+- the groupBy output is the occupied-cell table, unique cells with counts
+  > 0, which is exactly what ``DensityGrid`` holds: the collected columns
+  become the grid as-is, with no planet-sized array to zero and fill.
 
 addNode semantics preserved exactly (DensityMap.java:63-78): closed-bounds
 containment filter, then x/y cell with the x==width / y==height clamp.
@@ -79,7 +80,9 @@ def collect_density(df: DataFrame, lat_col: str = "lat", lon_col: str = "lon",
                     ) -> Tuple[DensityGrid, Area]:
     """Run the density scan and materialize (DensityGrid, exact data Area).
 
-    One distributed job: histogram + exact bounds ride the same groupBy
+    The grid is the collected occupied-cell table as-is, so the driver
+    holds O(occupied cells) whatever the resolution; an empty input gives
+    an empty grid and ``None`` for the area. One distributed job: histogram + exact bounds ride the same groupBy
     (per-cell min/max → global min/max on the driver). Caveat vs MapDetails:
     rows outside the (polar-clamped) planet bounds don't reach the histogram
     and so don't widen the exact area — for |lat| ≤ 85 inputs the results
@@ -87,7 +90,6 @@ def collect_density(df: DataFrame, lat_col: str = "lat", lon_col: str = "lon",
     rows can use ``exact_bounds`` separately."""
     import numpy as np
 
-    grid = DensityGrid(bounds, trim=True, resolution=resolution)
     # ONE job, ONE Arrow transfer (round 7): the previous shape persisted
     # the cell table so a second 1-row aggregate could reduce the exact
     # bounds on executors, keeping the driver transfer at 3/7 width — but
@@ -96,17 +98,15 @@ def collect_density(df: DataFrame, lat_col: str = "lat", lon_col: str = "lon",
     # points at resolution 13). The full 7-column cell table now crosses
     # once and the global bounds reduce in numpy over the per-cell
     # min/max (identical integers, reduction order irrelevant). The
-    # occupied-cell transfer is still the driver path's documented
-    # O(occupied cells) bound; callers beyond it use
-    # split_strategy="distributed".
+    # occupied-cell table is the driver path's whole footprint; callers
+    # beyond it use split_strategy="distributed".
     pdf = density_cells(df, lat_col, lon_col, resolution, bounds).toPandas()
     if len(pdf) == 0:
-        return grid, None
-    xs = pdf["cell_x"].to_numpy(np.int64)
-    ys = pdf["cell_y"].to_numpy(np.int64)
-    cnts = pdf["cnt"].to_numpy(np.int64)
-    grid.grid[xs, ys] = cnts          # cells unique after groupBy
-    grid.total = int(cnts.sum())
+        return DensityGrid(bounds, resolution), None
+    grid = DensityGrid(bounds, resolution,
+                       pdf["cell_x"].to_numpy(np.int64),
+                       pdf["cell_y"].to_numpy(np.int64),
+                       pdf["cnt"].to_numpy(np.int64))
     exact = Area(int(pdf["min_lat_mu"].min()), int(pdf["min_lon_mu"].min()),
                  int(pdf["max_lat_mu"].max()), int(pdf["max_lon_mu"].max()))
     return grid, exact

@@ -10,8 +10,10 @@ integer-exact so tile boundaries reproduce bit-for-bit:
                                interleave+reverse result mixing)
 
 The *histogram itself* is computed distributed (see ``split.density``); only
-the ≤ (8192×4096) counts grid ever reaches the driver, so this scales to
-arbitrarily many input rows.
+its occupied cells reach the driver, and the grid holds nothing else: no
+planet-sized array exists at any resolution. Each recursion node masks its
+parent's cells, so the split costs O(occupied cells × tree depth), and the
+driver holds O(occupied cells) however many input rows there are.
 
 Java-semantics notes (SURVEY.md §7.3 "what's hard"):
 - ``int`` casts truncate toward zero (np.trunc / int()).
@@ -23,7 +25,7 @@ Java-semantics notes (SURVEY.md §7.3 "what's hard"):
 from __future__ import annotations
 
 import math
-from typing import Dict, List, Optional, Tuple
+from typing import List, Optional
 
 import numpy as np
 
@@ -32,38 +34,33 @@ from ..geo.units import to_degrees, to_map_unit
 
 
 class DensityGrid:
-    """Dense 2D histogram of node counts over a rounded area.
+    """Occupied cells of a 2D node-count histogram over a rounded area.
 
-    Indexing is [x][y] like the reference (x = longitude cell, y = latitude
-    cell); shift = 24 - resolution (DensityMap.java:37-45).
+    Coordinates are [x][y] like the reference (x = longitude cell, y =
+    latitude cell, grid-local); shift = 24 - resolution (DensityMap.java:
+    37-45). Only occupied cells are held, as three parallel int64 arrays
+    ``xs``, ``ys`` and ``grid`` (the counts, every one > 0); a cell not
+    listed holds zero.
     """
 
-    def __init__(self, area: Area, trim: bool, resolution: int,
+    def __init__(self, area: Area, resolution: int,
+                 xs: Optional[np.ndarray] = None,
+                 ys: Optional[np.ndarray] = None,
                  counts: Optional[np.ndarray] = None):
         assert 1 <= resolution <= 24
         self.shift = 24 - resolution
-        self.trim_enabled = trim
         if area is EMPTY_AREA or (area.width == 0 or area.height == 0):
             self.bounds = EMPTY_AREA
             self.width = 0
             self.height = 0
-            self.grid = np.zeros((0, 0), dtype=np.int64)
-            self.total = 0
-            return
-        self.bounds = round_area(area, resolution)
-        self.height = self.bounds.height >> self.shift
-        self.width = self.bounds.width >> self.shift
-        if isinstance(counts, str) and counts == "defer":
-            # caller assigns .grid/.total itself (subset fast path)
-            self.grid = None
-            self.total = 0
-            return
-        if counts is None:
-            self.grid = np.zeros((self.width, self.height), dtype=np.int64)
         else:
-            assert counts.shape == (self.width, self.height)
-            self.grid = counts
-        self.total = int(self.grid.sum())
+            self.bounds = round_area(area, resolution)
+            self.height = self.bounds.height >> self.shift
+            self.width = self.bounds.width >> self.shift
+        if counts is None:
+            xs = ys = counts = np.zeros(0, dtype=np.int64)
+        self.xs, self.ys, self.grid = xs, ys, counts
+        self.total = int(counts.sum())
 
     # --- cell codecs (DensityMap.java:203-219) -------------------------
     def lon_to_x(self, lon: int) -> int:
@@ -78,91 +75,13 @@ class DensityGrid:
     def y_to_lat(self, y: int) -> int:
         return (y << self.shift) + self.bounds.min_lat
 
-    # --- population -----------------------------------------------------
-    def add_counts(self, xs: np.ndarray, ys: np.ndarray, counts: np.ndarray):
-        """Accumulate pre-aggregated (x, y, count) cell triples.
-
-        Callers compute x/y with addNode semantics (DensityMap.java:63-78):
-        containment-filtered, x==width / y==height clamped to the last cell.
-        """
-        np.add.at(self.grid, (xs, ys), counts)
-        self.total = int(self.grid.sum())
-        if getattr(self, "_sat", None) is not None:
-            del self._sat          # mutation invalidates the table
-
     def node_count(self) -> int:
         return self.total
 
-    # --- summed-area table (round 7) ------------------------------------
-    # The split recursion reads each node's subgrid ~4 times (subset
-    # total, trim occupancy both axes, weighted-median axis sums) — at
-    # resolution 13 that is O(grid_cells × tree_depth) element reads,
-    # ~5.6 s of the sf1.0 tiling_pipeline_counts wall on this machine.
-    # One prefix-sum pass S[i, j] = grid[:i, :j].sum() makes every
-    # rectangle total O(1) and every per-axis sum vector O(edge), and the
-    # results are the SAME exact int64 values (counts are non-negative,
-    # verified at build time, so `colsum > 0` is exactly the occupancy
-    # `any()` the trim loops need). Subsets inherit the parent's table
-    # with an absolute offset plus a valid-data extent (the zero padding
-    # an unaligned subset copy introduces contributes 0 to every sum).
-
-    def build_sat(self):
-        """Build the shared summed-area table on a data-owning grid.
-        Call after population; no-op for empty or negative-count grids
-        (negative counts would break the occupancy probe — every method
-        falls back to the direct numpy passes without a table)."""
-        if self.grid is None or self.grid.size == 0:
-            return
-        if bool((self.grid < 0).any()):
-            return
-        sat = np.zeros((self.width + 1, self.height + 1), dtype=np.int64)
-        # accumulate straight into the table: axis=1 first (contiguous
-        # inner axis), then an in-place scan along axis=0 — avoids two
-        # grid-sized intermediates on a bandwidth-starved machine
-        np.cumsum(self.grid, axis=1, out=sat[1:, 1:])
-        np.add.accumulate(sat[1:, 1:], axis=0, out=sat[1:, 1:])
-        self._sat = sat
-        self._sat_ox = 0
-        self._sat_oy = 0
-        self._ext = (0, 0, self.width, self.height)
-
-    def _rect_sum(self, x0: int, x1: int, y0: int, y1: int) -> int:
-        """grid[x0:x1, y0:y1].sum() in local coords via the table."""
-        ex0, ey0, ex1, ey1 = self._ext
-        a, b = max(x0, ex0), min(x1, ex1)
-        c, d = max(y0, ey0), min(y1, ey1)
-        if a >= b or c >= d:
-            return 0
-        s = self._sat
-        ox, oy = self._sat_ox, self._sat_oy
-        return int(s[ox + b, oy + d] - s[ox + a, oy + d]
-                   - s[ox + b, oy + c] + s[ox + a, oy + c])
-
-    def _colsums(self, x0: int, x1: int, y0: int, y1: int) -> np.ndarray:
-        """grid[x0:x1, y0:y1].sum(axis=1) in local coords via the table."""
-        out = np.zeros(max(x1 - x0, 0), dtype=np.int64)
-        ex0, ey0, ex1, ey1 = self._ext
-        a, b = max(x0, ex0), min(x1, ex1)
-        c, d = max(y0, ey0), min(y1, ey1)
-        if a < b and c < d:
-            s = self._sat
-            ox, oy = self._sat_ox, self._sat_oy
-            edge = s[ox + a: ox + b + 1, oy + d] - s[ox + a: ox + b + 1, oy + c]
-            out[a - x0: b - x0] = edge[1:] - edge[:-1]
-        return out
-
-    def _rowsums(self, x0: int, x1: int, y0: int, y1: int) -> np.ndarray:
-        """grid[x0:x1, y0:y1].sum(axis=0) in local coords via the table."""
-        out = np.zeros(max(y1 - y0, 0), dtype=np.int64)
-        ex0, ey0, ex1, ey1 = self._ext
-        a, b = max(x0, ex0), min(x1, ex1)
-        c, d = max(y0, ey0), min(y1, ey1)
-        if a < b and c < d:
-            s = self._sat
-            ox, oy = self._sat_ox, self._sat_oy
-            edge = s[ox + b, oy + c: oy + d + 1] - s[ox + a, oy + c: oy + d + 1]
-            out[c - y0: d - y0] = edge[1:] - edge[:-1]
-        return out
+    def _window(self, x0: int, x1: int, y0: int, y1: int) -> np.ndarray:
+        """Mask of the cells inside [x0, x1) × [y0, y1)."""
+        xs, ys = self.xs, self.ys
+        return (xs >= x0) & (xs < x1) & (ys >= y0) & (ys < y1)
 
     # --- subset + trim (DensityMap.java:88-179) -------------------------
     def subset(self, sub: Area) -> "DensityGrid":
@@ -172,81 +91,43 @@ class DensityGrid:
         max_lat = min(self.bounds.max_lat, sub.max_lat)
         max_lon = min(self.bounds.max_long, sub.max_long)
         if min_lat > max_lat or min_lon > max_lon:
-            return DensityGrid(EMPTY_AREA, self.trim_enabled, resolution)
+            return DensityGrid(EMPTY_AREA, resolution)
 
-        sub = Area(min_lat, min_lon, max_lat, max_lon)
-        if self.trim_enabled:
-            sub = self._trim(sub)
+        sub = self._trim(Area(min_lat, min_lon, max_lat, max_lon))
         if sub is EMPTY_AREA or sub.width == 0 or sub.height == 0:
-            return DensityGrid(EMPTY_AREA, self.trim_enabled, resolution)
+            return DensityGrid(EMPTY_AREA, resolution)
 
-        result = DensityGrid(sub, self.trim_enabled, resolution,
-                             counts="defer")
+        result = DensityGrid(sub, resolution)
+        # the reference's arraycopy loop (DensityMap.java:119-135): parent
+        # cells [start, start + max) land at result-local [0, max), where
+        # start comes from the (possibly unaligned) trimmed area and max is
+        # clamped to the re-rounded result dims. Cells outside the parent
+        # grid (the trimmed area may round past its edge) do not exist, so
+        # they read as zero.
         start_x = self.lon_to_x(sub.min_long)
         start_y = self.lat_to_y(sub.min_lat)
-        # window extent from the (possibly unaligned) subset area like the
-        # reference's arraycopy loop (DensityMap.java:119-135); clamp to the
-        # rounded result dims for safety
         max_x = min(sub.width >> self.shift, result.width)
         max_y = min(sub.height >> self.shift, result.height)
-        view = self.grid[start_x:start_x + max_x, start_y:start_y + max_y]
-        if view.shape == (result.width, result.height):
-            # grids are read-only after build — a view avoids copying the
-            # subtree at every quadtree recursion level
-            result.grid = view
-        else:
-            result.grid = np.zeros((result.width, result.height), dtype=np.int64)
-            result.grid[:max_x, :max_y] = view
-        if getattr(self, "_sat", None) is not None:
-            # inherit the table: local (0,0) sits at parent-local
-            # (start_x, start_y); the valid-data extent shrinks by the
-            # same shift and clips to the child dims
-            ex0, ey0, ex1, ey1 = self._ext
-            result._sat = self._sat
-            result._sat_ox = self._sat_ox + start_x
-            result._sat_oy = self._sat_oy + start_y
-            result._ext = (max(0, ex0 - start_x), max(0, ey0 - start_y),
-                           min(result.width, ex1 - start_x),
-                           min(result.height, ey1 - start_y))
-            result.total = result._rect_sum(0, result.width,
-                                            0, result.height)
-        else:
-            result.total = int(result.grid.sum())
+        keep = self._window(start_x, start_x + max_x,
+                            start_y, start_y + max_y)
+        result.xs = self.xs[keep] - start_x
+        result.ys = self.ys[keep] - start_y
+        result.grid = self.grid[keep]
+        result.total = int(result.grid.sum())
         return result
 
     def _trim(self, area: Area) -> Area:
-        """Shave empty edge rows/columns then re-round (DensityMap.java:137-179).
-
-        Vectorized: first/last occupied column within the y-window, then
-        first/last occupied row within the trimmed x-window — identical
-        semantics to the reference's four scan loops, two numpy passes."""
-        min_x = self.lon_to_x(area.min_long)
-        max_x = self.lon_to_x(area.max_long)
-        min_y = self.lat_to_y(area.min_lat)
-        max_y = self.lat_to_y(area.max_lat)
-
-        if getattr(self, "_sat", None) is not None:
-            # occupancy via per-axis sums from the table (counts are
-            # non-negative by build_sat's check, so sum > 0 == any)
-            occ_x = np.nonzero(
-                self._colsums(min_x, max_x, min_y, max_y) > 0)[0]
-        else:
-            win = self.grid[min_x:max_x, min_y:max_y]
-            occ_x = np.nonzero(win.any(axis=1))[0]
-        if len(occ_x) == 0:
+        """Shave empty edge rows/columns then re-round (DensityMap.java:137-179):
+        the occupied cells' x/y extent inside the area's window."""
+        inside = self._window(self.lon_to_x(area.min_long),
+                              self.lon_to_x(area.max_long),
+                              self.lat_to_y(area.min_lat),
+                              self.lat_to_y(area.max_lat))
+        if not inside.any():
             return EMPTY_AREA
-        new_min_x = min_x + int(occ_x[0])
-        new_max_x = min_x + int(occ_x[-1]) + 1
-        if getattr(self, "_sat", None) is not None:
-            occ_y = np.nonzero(
-                self._rowsums(new_min_x, new_max_x, min_y, max_y) > 0)[0]
-        else:
-            occ_y = np.nonzero(
-                self.grid[new_min_x:new_max_x, min_y:max_y].any(axis=0))[0]
-        if len(occ_y) == 0:
-            return EMPTY_AREA
-        min_x, max_x = new_min_x, new_max_x
-        min_y, max_y = min_y + int(occ_y[0]), min_y + int(occ_y[-1]) + 1
+        xs, ys = self.xs[inside], self.ys[inside]
+        min_x, max_x = int(xs.min()), int(xs.max()) + 1
+        min_y, max_y = int(ys.min()), int(ys.max()) + 1
 
         trimmed = Area(self.y_to_lat(min_y), self.x_to_lon(min_x),
                        self.y_to_lat(max_y), self.x_to_lon(max_x))
@@ -315,29 +196,14 @@ class SplittableDensityArea:
                             split_result[1].split(max_nodes))
 
     # --- split point selection (SplittableDensityArea.java:127-196) -----
-    # colsum/rowsum computed once per node (two grid passes serve both axes)
-    def _axis_sums(self):
-        if getattr(self, "_sums", None) is None:
-            d = self.densities
-            if getattr(d, "_sat", None) is not None:
-                self._sums = (d._colsums(0, d.width, 0, d.height),
-                              d._rowsums(0, d.width, 0, d.height))
-            else:
-                g = d.grid
-                self._sums = (g.sum(axis=1), g.sum(axis=0))
-        return self._sums
-
+    # weighted mean Σcnt·x // Σcnt over the occupied cells, exact int64
     def _get_split_horiz(self) -> Optional[int]:
-        colsum, _ = self._axis_sums()
-        s = int(colsum.sum())
-        ws = int((colsum * np.arange(len(colsum), dtype=np.int64)).sum())
-        return self._limit(0, self.densities.width, ws // s)
+        d = self.densities
+        return self._limit(0, d.width, int(np.dot(d.grid, d.xs)) // d.total)
 
     def _get_split_vert(self) -> Optional[int]:
-        _, rowsum = self._axis_sums()
-        s = int(rowsum.sum())
-        ws = int((rowsum * np.arange(len(rowsum), dtype=np.int64)).sum())
-        return self._limit(0, self.densities.height, ws // s)
+        d = self.densities
+        return self._limit(0, d.height, int(np.dot(d.grid, d.ys)) // d.total)
 
     @staticmethod
     def _limit(first: int, second: int, calc_offset: int) -> Optional[int]:
@@ -434,8 +300,6 @@ def split_area(grid: DensityGrid, exact_area: Area, resolution: int,
     getRoundedArea, DensityMapCollector.java:80-83). Returns Areas with
     map_id set in reference traversal order."""
     bbounds = rounded_split_bounds(exact_area, resolution)
-    if getattr(grid, "_sat", None) is None:
-        grid.build_sat()           # one pass; every recursion node O(edge)
     splittable = SplittableDensityArea(grid.subset(bbounds))
     areas = splittable.split(max_nodes)
     if not areas and grid.node_count() > 0:

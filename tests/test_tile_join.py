@@ -46,12 +46,15 @@ def test_density_matches_bruteforce(spark, corpus):
     inb = ((lats >= b.min_lat) & (lats <= b.max_lat)
            & (lons >= b.min_long) & (lons <= b.max_long))
     assert grid.node_count() == int(inb.sum())
-    # spot-check a few hot cells
+    # every occupied cell and its count, against the per-point cell ids
     xs = np.minimum((lons[inb] - b.min_long) >> grid.shift, grid.width - 1)
     ys = np.minimum((lats[inb] - b.min_lat) >> grid.shift, grid.height - 1)
-    oracle = np.zeros_like(grid.grid)
-    np.add.at(oracle, (xs, ys), 1)
-    assert (oracle == grid.grid).all()
+    cells, cnt = np.unique(np.stack([xs, ys], axis=1), axis=0,
+                           return_counts=True)
+    oracle = sorted(zip(cells[:, 0].tolist(), cells[:, 1].tolist(),
+                        cnt.tolist()))
+    got = sorted(zip(grid.xs.tolist(), grid.ys.tolist(), grid.grid.tolist()))
+    assert got == oracle
 
 
 def test_pipeline_assignment_matches_bruteforce(spark, corpus):
